@@ -15,22 +15,27 @@ Each stage materializes to a checkpoint table (parquet here; Iceberg
 `MERGE INTO` partitioned by bucket(subject) in production — this repo
 targets the sandbox where Iceberg jars aren't available, the layout
 is identical).  A `_MANIFEST.json` per stage records row count,
-wall-clock, partition count and a params fingerprint; `resume=True`
-skips any stage whose manifest matches the fingerprint.  Per-partition
-metrics (rows per partition id) are captured via observable metrics +
-a partition-id aggregation and stored in the manifest.
+wall-clock, the written schema and a params fingerprint; `resume=True`
+skips any stage whose manifest matches the fingerprint.  Per-file row
+counts (`partition_rows`, keyed by data file name) and their skew
+(max / median) come from the parquet footers of the files just
+written, read on the driver, and every re-read of a stage applies the
+recorded schema — like Iceberg table metadata, the manifest carries
+what the writer knew, so no Spark job runs just to rediscover it.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import statistics
 import time
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rdf_knowledge_extractor_spark.config import Configuration
 from rdf_knowledge_extractor_spark.functions.extract import (
@@ -41,6 +46,7 @@ from rdf_knowledge_extractor_spark.functions.html_text import with_extracted_tex
 from rdf_knowledge_extractor_spark.operators.canonicalize import canonicalize_triples
 from rdf_knowledge_extractor_spark.operators.dedup import merge_results
 from rdf_knowledge_extractor_spark.operators.linking import link_entities
+from rdf_knowledge_extractor_spark.plans.store import TripleStore, file_row_counts
 
 GRAPH_BUCKETS = 64  # production: Iceberg PARTITIONED BY (bucket(N, subject))
 
@@ -112,12 +118,21 @@ class KgPipeline:
     def _manifest_path(self, stage: str) -> Path:
         return self.base / stage / "_MANIFEST.json"
 
+    def _read_stage(self, stage: str, schema: dict) -> DataFrame:
+        """A stage's output, read with its recorded schema (no
+        inference job)."""
+        return self.spark.read.schema(StructType.fromJson(schema)).parquet(
+            str(self.base / stage / "data")
+        )
+
     def _load_if_done(self, stage: str, fp: str) -> DataFrame | None:
         mp = self._manifest_path(stage)
         if mp.exists():
             manifest = json.loads(mp.read_text())
-            if manifest.get("fingerprint") == fp:
-                return self.spark.read.parquet(str(self.base / stage / "data"))
+            # a manifest without a schema predates schema recording:
+            # treat the stage as not done and recompute it
+            if manifest.get("fingerprint") == fp and "schema" in manifest:
+                return self._read_stage(stage, manifest["schema"])
         return None
 
     def _run_stage(
@@ -133,14 +148,11 @@ class KgPipeline:
         df: DataFrame = build()
         out = str(self.base / stage / "data")
         df.write.mode("overwrite").parquet(out)
-        persisted = self.spark.read.parquet(out)
-        # per-partition lineage: rows per physical partition of the output
-        part_rows = (
-            persisted.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        )
-        rows = sum(r["count"] for r in part_rows)
+        schema = df.schema.jsonValue()
+        # per-partition lineage: rows per written file, from the footers
+        part_rows = file_row_counts(out)
+        rows = sum(part_rows.values())
+        median = statistics.median(part_rows.values()) if part_rows else 0
         elapsed = time.monotonic() - t0
         manifest = {
             "stage": stage,
@@ -148,13 +160,16 @@ class KgPipeline:
             "rows": rows,
             "seconds": elapsed,
             "partitions": len(part_rows),
-            "partition_rows": {str(r["pid"]): r["count"] for r in part_rows},
+            "partition_rows": part_rows,
+            # null when the median file is empty (no finite ratio)
+            "partition_skew": max(part_rows.values()) / median if median else None,
+            "schema": schema,
             "params": params,
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._manifest_path(stage).write_text(json.dumps(manifest, indent=2))
         self.results.append(StageResult(stage, rows, elapsed, len(part_rows), False))
-        return persisted
+        return self._read_stage(stage, schema)
 
     # -- the pipeline ----------------------------------------------------
     def run(
@@ -239,13 +254,12 @@ class KgPipeline:
         (ref:src/knowledge_graph/mod.rs:91-114) held under crash/retry.
         Default batch_id is the run's input+config fingerprint, so
         re-running the same pipeline twice commits once."""
-        from rdf_knowledge_extractor_spark.plans.store import TripleStore
-
         bid = batch_id or self._fingerprint("store_commit", {})
         return TripleStore(self.spark, store_root).insert_if_absent(graph, bid)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(str(self.base / "s3_lineage" / "data"))
+        manifest = json.loads(self._manifest_path("s3_lineage").read_text())
+        return self._read_stage("s3_lineage", manifest["schema"])
 
     def stage_manifests(self) -> list[dict]:
         out = []

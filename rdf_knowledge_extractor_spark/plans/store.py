@@ -24,9 +24,14 @@ semantics hold under failure and retry WITHOUT Iceberg jars:
 
 The COMPUTE is unchanged: new rows = left ANTI join of the batch
 against the committed graph (AQE picks broadcast vs SMJ) — only the
-COMMIT becomes transactional.  Scale: the manifest holds file paths +
-counts (O(batches)), not rows; data stays partitioned parquet exactly
-as an Iceberg table's data layer would.
+COMMIT becomes transactional.  Scale: the manifest holds file paths,
+counts and each batch's written schema (O(batches)), not rows; data
+stays partitioned parquet exactly as an Iceberg table's data layer
+would.  Like Iceberg's table metadata, the manifest is the source of
+truth for table metadata: row counts come from the parquet footers of
+the files just written, read on the driver, and `read()` applies the
+recorded schema, so neither a commit nor a read runs a Spark job just
+to rediscover metadata the writer already had.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from rdf_knowledge_extractor_spark.operators.dedup import (
     TRIPLE_KEY,
@@ -59,8 +65,9 @@ class TripleStore:
         <root>/manifest.json            # the ONLY mutable path (atomic swap)
         <root>/data/<batch>-<uuid>/…    # immutable parquet file sets
 
-    `manifest.json`: {version, batches: {batch_id: {path, rows, added}},
-    total_rows, updated}.
+    `manifest.json`: {version, batches: {batch_id: {path, rows, added,
+    schema}}, total_rows}.  `schema` is the written Spark schema
+    (`StructType.jsonValue()`).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -114,17 +121,35 @@ class TripleStore:
             os.replace(tmp, self._manifest_path())  # atomic visibility point
 
     # -- reads ---------------------------------------------------------
+    def _live_batches(self) -> list[dict]:
+        """Manifest entries `read()` reaches, in commit order.  Entries
+        with rows=0 (compacted-away history, zero-added batches) keep
+        their batch_id for idempotency but reference no data."""
+        return [b for b in self._read_manifest()["batches"].values() if b["rows"] > 0]
+
     def committed_paths(self) -> list[str]:
-        m = self._read_manifest()
-        return [b["path"] for b in m["batches"].values() if b["rows"] > 0]
+        return [b["path"] for b in self._live_batches()]
 
     def read(self) -> DataFrame | None:
         """Union of all committed file sets (None when empty).  Orphan
-        directories from crashed commits are invisible by design."""
-        paths = self.committed_paths()
-        if not paths:
+        directories from crashed commits are invisible by design.
+
+        Parquet inference takes the footer schema of the data file whose
+        path sorts first (Spark's `ParquetUtils.splitFiles`); the
+        recorded schema of that file's batch gives the same DataFrame
+        without the inference job."""
+        live = self._live_batches()
+        if not live:
             return None
-        return self.spark.read.parquet(*paths)
+        paths = [b["path"] for b in live]
+        # the trailing separator orders directories as their files sort
+        first = min(live, key=lambda b: os.path.abspath(b["path"]) + os.sep)
+        if "schema" not in first:
+            # batch committed before schemas were recorded: stores are
+            # durable data, so old manifests stay readable by inference
+            return self.spark.read.parquet(*paths)
+        schema = StructType.fromJson(first["schema"])
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def total_rows(self) -> int:
         return self._read_manifest()["total_rows"]
@@ -166,7 +191,7 @@ class TripleStore:
 
         out_dir = self.root / "data" / f"{_safe(batch_id)}-{uuid.uuid4().hex[:8]}"
         rows.write.mode("overwrite").parquet(str(out_dir))
-        added = _parquet_row_count(out_dir)
+        added = sum(file_row_counts(out_dir).values())
 
         if _crash_before_commit:
             raise RuntimeError("simulated crash before manifest swap")
@@ -176,6 +201,7 @@ class TripleStore:
             "path": str(out_dir),
             "rows": added,
             "added": added,
+            "schema": rows.schema.jsonValue(),
             "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         manifest["total_rows"] += added
@@ -196,7 +222,7 @@ class TripleStore:
             self.root / "data" / f"compact-{uuid.uuid4().hex[:8]}"
         )
         df.write.mode("overwrite").parquet(str(out_dir))
-        total = _parquet_row_count(out_dir)
+        total = sum(file_row_counts(out_dir).values())
         # keep idempotency history: batch_ids stay known with their
         # original added counts but reference no data; the compacted
         # file set is the single live entry (it must come LAST so a
@@ -214,6 +240,7 @@ class TripleStore:
                     "path": str(out_dir),
                     "rows": total,
                     "added": 0,
+                    "schema": df.schema.jsonValue(),
                     "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 },
             },
@@ -240,11 +267,7 @@ class TripleStore:
         # retained their data dirs forever (round-4 advice,
         # store.py:237).  Zero-added batches' dirs are likewise
         # unreachable from read() and safe to reclaim.
-        live = {
-            os.path.realpath(b["path"])
-            for b in self._read_manifest()["batches"].values()
-            if b["rows"] > 0
-        }
+        live = {os.path.realpath(b["path"]) for b in self._live_batches()}
         now = time.time()
         deleted: list[str] = []
         for d in sorted((self.root / "data").iterdir()):
@@ -259,17 +282,18 @@ class TripleStore:
         return deleted
 
 
-def _parquet_row_count(out_dir: Path) -> int:
-    """Committed-batch row count from parquet FOOTERS (driver-side
-    metadata read, like Iceberg's manifest stats) — replaces the former
-    full re-read of the just-written files, which doubled sink I/O per
-    batch at streaming cadence (round-3 verdict, wrong #4)."""
+def file_row_counts(out_dir: str | Path) -> dict[str, int]:
+    """Rows per data file of a just-written parquet directory, keyed by
+    file name, from the parquet FOOTERS (driver-side metadata read, like
+    Iceberg's per-file manifest stats) — no Spark job and no re-read of
+    the data, which would double sink I/O per batch at streaming cadence
+    (round-3 verdict, wrong #4)."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for f in out_dir.glob("*.parquet"):
-        total += pq.read_metadata(f).num_rows
-    return total
+    return {
+        f.name: pq.read_metadata(f).num_rows
+        for f in sorted(Path(out_dir).glob("*.parquet"))
+    }
 
 
 def _safe(batch_id: str) -> str:

@@ -154,7 +154,10 @@ class SparqlEngine:
         self.graph = graph
         #: diagnostics of the most recent transitive-path evaluation:
         #: {"mode": "seeded"|"full", "rounds": int} — lets tests assert
-        #: a bound-endpoint path never computed the full closure
+        #: a bound-endpoint path never computed the full closure.  Full
+        #: mode also records "restarted": True when path doubling overran
+        #: _DOUBLING_MAX_CLOSURE; "rounds" then counts only the rounds of
+        #: the semi-naive restart
         self.last_path_stats: dict | None = None
 
     # -- parsing -----------------------------------------------------
@@ -755,6 +758,7 @@ class SparqlEngine:
             .localCheckpoint(eager=True)
         )
         rounds = 0
+        restarted = False
         if base.count() <= _DRIVER_PATH_MAX_EDGES:
             # small-input arm: PATH DOUBLING — closure ∘ closure per
             # round reaches fixed point in O(log diameter) rounds
@@ -783,11 +787,16 @@ class SparqlEngine:
                 new = new.localCheckpoint(eager=True)
                 rounds += 1
                 if new.isEmpty():
-                    self.last_path_stats = {"mode": "full", "rounds": rounds}
+                    self.last_path_stats = {
+                        "mode": "full", "rounds": rounds, "restarted": False
+                    }
                     return closure
                 closure = closure.unionByName(new).localCheckpoint(eager=True)
                 if closure.count() > _DOUBLING_MAX_CLOSURE:
-                    break  # restart semi-naive below (see constant note)
+                    # restart semi-naive below (see constant note); its
+                    # rounds are counted afresh, not added to doubling's
+                    rounds, restarted = 0, True
+                    break
         closure = base
         frontier = base
         hop = base.select(
@@ -803,7 +812,9 @@ class SparqlEngine:
             new = new.localCheckpoint(eager=True)
             rounds += 1
             if new.isEmpty():
-                self.last_path_stats = {"mode": "full", "rounds": rounds}
+                self.last_path_stats = {
+                    "mode": "full", "rounds": rounds, "restarted": restarted
+                }
                 return closure
             closure = closure.unionByName(new).localCheckpoint(eager=True)
             frontier = new

@@ -30,3 +30,27 @@ def example_config():
         },
     )
     return cfg
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """`count_jobs(fn)` -> (fn(), number of Spark jobs fn submitted),
+    counted through a status-tracker job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        # job-start events reach the status store through the async
+        # listener bus: drain it before counting
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import statistics
+
 from pyspark.sql import functions as F
 
 from rdf_knowledge_extractor_spark.plans.pipeline import KgPipeline
@@ -31,6 +34,13 @@ def test_pipeline_run_and_resume(spark, example_config, tmp_path):
     }
     assert manifests["s5_graph"]["rows"] == n1
     assert sum(manifests["s5_graph"]["partition_rows"].values()) == n1
+    # per-file footer rows keyed by file name, skew = max / median
+    for m in manifests.values():
+        counts = m["partition_rows"]
+        assert all(k.endswith(".parquet") for k in counts)
+        assert m["partitions"] == len(counts)
+        median = statistics.median(counts.values())
+        assert m["partition_skew"] == (max(counts.values()) / median if median else None)
 
     # resume: a fresh pipeline over the same dir skips every stage
     pipe2 = KgPipeline(spark, example_config, str(tmp_path), partitions=4)
@@ -196,3 +206,80 @@ def test_pyfiles_zip_is_reproducible_and_complete(tmp_path):
     assert all(n.startswith("rdf_knowledge_extractor_spark/") for n in names)
     assert "rdf_knowledge_extractor_spark/plans/store.py" in names
     assert not any("__pycache__" in n or n.endswith(".pyc") for n in names)
+
+
+# -- stage metadata from the manifest, not from Spark jobs ---------------
+
+def _stage_df(spark):
+    """Non-nullable and nested fields: the parquet round trip makes
+    every level nullable, and the recorded-schema read must agree."""
+    return spark.range(40).select(
+        F.col("id"),
+        F.concat(F.lit("e"), F.col("id").cast("string")).alias("name"),
+        F.array(F.col("id"), F.lit(1)).alias("ids"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("nested"),
+    ).repartition(3)
+
+
+def test_run_stage_submits_only_its_write_jobs(spark, example_config, tmp_path, count_jobs):
+    df = _stage_df(spark)
+    _, write_jobs = count_jobs(
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "plain"))
+    )
+    pipe = KgPipeline(spark, example_config, str(tmp_path / "ck"), partitions=3)
+    out, jobs = count_jobs(lambda: pipe._run_stage("t", {}, lambda: df))
+    assert jobs == write_jobs > 0
+    # the recorded-schema re-read equals what inference gives
+    inferred = spark.read.parquet(str(tmp_path / "ck" / "t" / "data"))
+    assert out.schema == inferred.schema
+    assert sorted(out.collect()) == sorted(inferred.collect())
+    assert pipe.results[-1].rows == 40
+
+
+def test_pipeline_resume_submits_only_input_identity_jobs(
+    spark, example_config, tmp_path, count_jobs
+):
+    pages = pages_dataframe(spark, 10, seed=11).drop("text")
+    ck = str(tmp_path / "ck")
+    graph = KgPipeline(spark, example_config, ck, partitions=2).run(pages, fused=True)
+    n = graph.count()
+
+    pipe = KgPipeline(spark, example_config, ck, partitions=2)
+    _, identity_jobs = count_jobs(lambda: pipe._input_identity(pages))
+    graph2, jobs = count_jobs(lambda: pipe.run(pages, fused=True))
+    assert all(r.resumed for r in pipe.results)
+    assert jobs == identity_jobs > 0
+    assert graph2.count() == n
+    # every stage re-read has the schema inference would give
+    for m in pipe.stage_manifests():
+        path = str(tmp_path / "ck" / m["stage"] / "data")
+        assert pipe._read_stage(m["stage"], m["schema"]).schema == (
+            spark.read.parquet(path).schema
+        )
+
+
+def test_pipeline_old_manifest_without_schema_recomputes(spark, example_config, tmp_path):
+    """A stage manifest written before schemas were recorded counts as
+    not done: the stage recomputes and its manifest gains a schema."""
+    pages = pages_dataframe(spark, 10, seed=12).drop("text")
+    ck = tmp_path / "ck"
+    KgPipeline(spark, example_config, str(ck), partitions=2).run(pages, fused=True)
+    for mp in ck.glob("*/_MANIFEST.json"):
+        m = json.loads(mp.read_text())
+        # the old format: pid-keyed partition_rows, no schema, no skew
+        mp.write_text(json.dumps({
+            "stage": m["stage"],
+            "fingerprint": m["fingerprint"],
+            "rows": m["rows"],
+            "seconds": m["seconds"],
+            "partitions": 1,
+            "partition_rows": {"0": m["rows"]},
+            "params": m["params"],
+            "ts": m["ts"],
+        }))
+
+    pipe = KgPipeline(spark, example_config, str(ck), partitions=2)
+    pipe.run(pages, fused=True)
+    assert pipe.results and not any(r.resumed for r in pipe.results)
+    assert all("schema" in m for m in pipe.stage_manifests())
+    assert pipe.lineage().count() == 10

@@ -841,6 +841,28 @@ def test_sparql_path_bound_subject_is_seeded_not_full_closure(two_chain_graph):
     assert eng.last_path_stats["rounds"] > 3
 
 
+def test_sparql_path_doubling_overrun_restarts_round_count(two_chain_graph, monkeypatch):
+    """Past _DOUBLING_MAX_CLOSURE the full closure restarts semi-naive
+    from the base edges: the result is unchanged, `rounds` counts the
+    semi-naive rounds only, and the restart is recorded."""
+    from rdf_knowledge_extractor_spark.query import sparql
+    from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
+
+    q = f"""PREFIX kg: <{NS}>
+    SELECT ?a ?b WHERE {{ ?a kg:next+ ?b }}"""
+    eng = SparqlEngine(two_chain_graph)
+    want = sorted((r.a, r.b) for r in eng.execute(q).collect())
+    assert eng.last_path_stats == {"mode": "full", "rounds": 4, "restarted": False}
+
+    # 7 base edges -> 12 closure pairs after one doubling round > 3
+    monkeypatch.setattr(sparql, "_DOUBLING_MAX_CLOSURE", 3)
+    eng = SparqlEngine(two_chain_graph)
+    assert sorted((r.a, r.b) for r in eng.execute(q).collect()) == want
+    # semi-naive over the 5-hop chain: new pairs of length 2..5, then
+    # the empty frontier; the one doubling round is not added
+    assert eng.last_path_stats == {"mode": "full", "rounds": 5, "restarted": True}
+
+
 def test_sparql_path_bound_object_seeds_reverse(two_chain_graph):
     from rdf_knowledge_extractor_spark.query.sparql import SparqlEngine
 

@@ -191,3 +191,70 @@ def test_vacuum_reclaims_compacted_away_batch_dirs(store, spark):
     # store still reads fully, idempotency history intact
     assert store.read().count() == 2
     assert store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1") == 1
+
+
+# -- schema and row counts from the manifest, not from Spark jobs --------
+
+def _rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _assert_reads_like_inference(store, spark):
+    got = store.read()
+    inferred = spark.read.parquet(*store.committed_paths())
+    assert got.schema == inferred.schema  # nullable flags included
+    assert _rows(got) == _rows(inferred)
+
+
+def test_read_submits_no_spark_jobs(store, spark, count_jobs):
+    store.insert_if_absent(_triples(spark, [("s1", "p", "o1")]), "b1")
+    store.insert_if_absent(_triples(spark, [("s2", "p", "o2")]), "b2")
+    df, jobs = count_jobs(store.read)
+    assert jobs == 0
+    assert df.count() == 2
+
+
+@pytest.mark.parametrize("narrow_first", [False, True])
+def test_read_schema_matches_inference_across_batch_schemas(
+    store, spark, narrow_first
+):
+    """Batches with different column sets: read() gives exactly what
+    parquet inference gives (the schema of the file whose path sorts
+    first, whichever batch committed first) — before and after
+    compact()."""
+    wide = _triples(spark, [("s1", "p", "o1"), ("s2", "p", "o2")])
+    narrow = spark.createDataFrame(
+        [("s3", "p", "o3", "g")],
+        "subject string not null, predicate string not null, "
+        "object string not null, graph string",
+    )
+    batches = [("narrow", narrow), ("wide", wide)]
+    for bid, df in batches if narrow_first else batches[::-1]:
+        store.insert_if_absent(df, bid, dedup_batch=False)
+    _assert_reads_like_inference(store, spark)
+    assert store.compact() == 3
+    _assert_reads_like_inference(store, spark)
+
+
+def test_old_manifest_without_schema_reads_by_inference(
+    store, spark, count_jobs
+):
+    """A store committed before schemas were recorded (hand-written
+    manifest in that format) still reads, by inference, and new
+    commits on top of it work."""
+    path = store.root / "data" / "b1-00000000"
+    _triples(spark, [("s1", "p", "o1"), ("s2", "p", "o2")]).write.parquet(str(path))
+    store._manifest_path().write_text(json.dumps({
+        "version": 1,
+        "batches": {"b1": {"path": str(path), "rows": 2, "added": 2,
+                           "ts": "2026-01-01T00:00:00Z"}},
+        "total_rows": 2,
+    }))
+    df, jobs = count_jobs(store.read)
+    assert jobs >= 1  # the schema inference job
+    assert {r.subject for r in df.collect()} == {"s1", "s2"}
+    assert store.insert_if_absent(
+        _triples(spark, [("s2", "p", "o2"), ("s3", "p", "o3")]), "b2"
+    ) == 1
+    _assert_reads_like_inference(store, spark)
+    assert store.read().count() == 3
