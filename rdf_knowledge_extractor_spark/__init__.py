@@ -4,7 +4,7 @@ A brand-new, Spark-first re-expression of the capabilities of the
 reference `rdf_knowledge_extractor` (Rust, single node): staged
 DataFrame jobs over a Common-Crawl-style web-pages table —
 HTML→text extraction, micro-batched triple extraction, normalization,
-validation, dedup, entity linking (MinHash-LSH + connected
+validation, dedup, entity linking (prefix filtering + connected
 components), canonicalization, graph materialization, a query layer,
 serializers, and a template/report layer — plus the large-scale
 training-data operators (dedup family, similarity search, text

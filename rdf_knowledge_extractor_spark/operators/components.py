@@ -1,18 +1,11 @@
 """Connected components on a DataFrame edge list.
 
-Three algorithms behind one dispatcher:
+Two algorithms behind one dispatcher, `connected_components`:
 
-- **driver union-find** (`_components_driver`) — the ≤100k-edge arm:
-  one collect + path-compressed union-find, min-label semantics; at
-  this size the distributed loops' per-round driver jobs ARE the
-  cost.  NULL endpoints are out of the component contract (an entity
-  id is never NULL; the two distributed arms historically disagreed
-  on them — labelprop emitted a NULL node, star arm dropped the
-  edge — the driver arm keeps non-NULL endpoints as isolated nodes).
-- **label propagation** (`connected_components_labelprop`) — min-label
-  flooding; O(component diameter) rounds; kept as a directly-callable
-  algorithm (and differential-test twin) but no longer dispatched —
-  the driver arm covers its former small-input band.
+- **driver union-find** (operators/graph_local.py) — edge lists of at
+  most `graph_local.MAX_EDGES` rows: the bounded collect that picks the
+  arm also fetches the edges, and union-find replaces the iterative
+  loop's ~2 jobs per round.
 - **alternating large-star / small-star**
   (`connected_components_star`) — Kiveris et al., "Connected
   Components in MapReduce and Beyond" (cited in PAPERS.md; SURVEY
@@ -20,6 +13,10 @@ Three algorithms behind one dispatcher:
   neighborhood, halving tree heights — O(log n) rounds REGARDLESS of
   diameter.  This is the scale path: a 10-hop chain (web-graph-ish
   component) costs ~log₂ rounds, not 10.
+
+Both arms agree on every edge list (tests/test_graph_local.py),
+NULL endpoints included: a NULL connects nothing and is never a node,
+while the non-NULL endpoint of a NULL edge is an isolated node.
 
 Shared scale design:
 - NO explicit repartition — post-shuffle parallelism is left to AQE
@@ -38,86 +35,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# below this many edges the whole component computation fits the
-# driver comfortably (≤ a few MB of node strings — the same
-# scalar-bounded-collect class as the IVF training sample) and a
-# single collect + union-find replaces the iterative loop's ~2 jobs
-# per round.  At 100-TB scale the count() dispatch sends the work to
-# the distributed star rounds unchanged.
-_DRIVER_MAX_EDGES = 100_000
-
-
-def _components_driver(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Union-find on a collected edge list — small-input fast path.
-
-    Semantics identical to the distributed arms: component = min
-    reachable node under the same ordering Spark uses (UTF-8 byte
-    order ≡ code-point order, which is Python's `<` on str), isolated
-    nodes appear iff present in `edges`, self-loops allowed, NULL
-    endpoints ignored by the joins' equality semantics (a NULL never
-    equals anything, so distributed rounds never propagate through
-    it; we drop NULL-endpoint edges likewise)."""
-    spark = edges.sparkSession
-    rows = edges.select(src, dst).collect()
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] is not root and parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in rows:
-        a, b = r[0], r[1]
-        for n in (a, b):
-            if n is not None and n not in parent:
-                parent[n] = n
-        if a is None or b is None:
-            continue
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # keep the MIN as the root so the label is the component min
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    from pyspark.sql import types as T
-
-    node_type = edges.schema[src].dataType
-    schema = T.StructType(
-        [
-            T.StructField("node", node_type, True),
-            T.StructField("component", node_type, True),
-        ]
-    )
-    out = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(out, schema)
+# _DRIVER_MAX_EDGES: the size-dispatch bound under its former name,
+# which the benchmark's driver-arm metric (perfbench/workloads.py) reads
+from rdf_knowledge_extractor_spark.operators.graph_local import (
+    MAX_EDGES as _DRIVER_MAX_EDGES,  # noqa: F401
+    collect_small,
+    union_find,
+)
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """DataFrame(node, component) — component = min node id (lexicographic
     for strings) reachable from `node`.  Isolated nodes appear iff they
-    appear in `edges` (self-loops allowed).
+    appear in `edges` (self-loops allowed); the node type is the input's.
 
     Dispatches: driver-side union-find for small edge sets,
     alternating large-star/small-star at scale (see module
-    docstring)."""
+    docstring).  The edge projection stays persisted across the
+    bounded collect, so the star fallback does not recompute it."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    n_edges = e.count()
     try:
-        if n_edges == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "node string, component string"
-            )
-        if n_edges <= _DRIVER_MAX_EDGES:
-            return _components_driver(e, "a", "b")
-        return connected_components_star(e, "a", "b", max_iter)[0]
+        rows = collect_small(e)
+        if rows is not None:
+            return union_find(e.sparkSession, rows, e.schema["a"].dataType)
+        return connected_components_star(e, "a", "b")[0]
     finally:
         e.unpersist()
 
@@ -137,10 +80,10 @@ def connected_components_star(
                   itself) to the min of those.
     The edge set converges to stars rooted at component minima in
     O(log n) rounds (paper: O(log² n) worst case, log n observed)."""
-    spark = edges.sparkSession
     universe = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
+        .filter(F.col("node").isNotNull())
         .distinct()
         .persist()
     )
@@ -207,63 +150,3 @@ def connected_components_star(
     )
     universe.unpersist()
     return labels, rounds
-
-
-def connected_components_labelprop(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Min-label propagation (O(diameter) rounds) — small-input fast path."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    # AQE (with canChangeCachedPlanOutputPartitioning, see session.py)
-    # right-sizes the cached post-distinct layout, so every round's map
-    # over `sym` is data-proportional with no manual resize
-    if sym.count() == 0:
-        sym.unpersist()
-        return edges.sparkSession.createDataFrame([], "node string, component string")
-
-    # round 0 seeds each node with min(itself, direct neighbors) — one
-    # aggregation instead of a pure-identity start saves a full round
-    labels = (
-        sym.groupBy(F.col("a").alias("node"))
-        .agg(F.min("b").alias("_min_nbr"))
-        .select("node", F.least(F.col("node"), F.col("_min_nbr")).alias("component"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .groupBy(sym["a"].alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        updated = labels.join(neighbor_min, on="node", how="left").select(
-            "node",
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_min"), F.col("component")),
-            ).alias("new_component"),
-            F.col("component").alias("old_component"),
-        )
-        # localCheckpoint EVERY round: the run cost of the extra job is
-        # milliseconds, while letting the logical plan nest join-upon-join
-        # makes the driver's single-threaded Catalyst re-analysis the
-        # bottleneck within a handful of rounds (measured: job time ~30 ms,
-        # plan analysis seconds once the tree is a few rounds deep)
-        updated = updated.localCheckpoint(eager=True)
-        changed = not updated.filter(
-            F.col("new_component") != F.col("old_component")
-        ).isEmpty()
-        labels = updated.select("node", F.col("new_component").alias("component"))
-        if not changed:
-            break
-
-    sym.unpersist()
-    return labels

@@ -1,4 +1,4 @@
-"""Entity linking: MinHash-LSH blocking + verified candidate edges.
+"""Entity linking: prefix-filtered candidates + verified edges.
 
 North-star stage (BASELINE.json): coreferent entity URIs produced by
 extraction ("TechCorp Inc." / "TechCorp" / "TechCorp, Inc." …) must be
@@ -9,14 +9,13 @@ discovered as link candidates WITHOUT an O(n²) comparison.  Design:
 2. normalize        = pure-Catalyst canonical key (lowercased local
    name, non-alnum stripped, trailing corporate suffix token removed)
    and its character-3-gram shingle array;
-3. MinHash          = vectorized pandas UDF (numpy; 64 universal-hash
-   permutations folded into b=32 bands × r=2 rows) — each entity emits
-   32 (band_idx, band_val) bucket keys;
-4. blocking join    = self-equi-join on the bucket key; `uri_a <
-   uri_b` halves the pairs; AQE skew-join splits hot buckets, and
-   buckets larger than `max_bucket_size` are dropped (and counted)
-   rather than allowed to produce a quadratic blow-up — the classic
-   stop-word rule of LSH blocking;
+3. key tier         = entities sharing a canonical key are one cluster
+   by construction; one groupBy collapses each key group to its
+   min-URI representative;
+4. prefix filtering = PPJoin-style inverted index over each
+   representative's rarest shingles (`prefix_candidate_pairs`): EXACT
+   recall at the Jaccard threshold; oversized postings route through
+   the distributed self-join arm, never dropped;
 5. verification     = pure-Catalyst Jaccard on the shingle arrays
    (size(intersect)/size(union)) OR canonical-key equality — no
    Python in the verify path;
@@ -26,6 +25,8 @@ discovered as link candidates WITHOUT an O(n²) comparison.  Design:
 The reference has no equivalent (its store keeps every surface-form
 URI distinct); this stage is the scale-mandated addition
 (BASELINE.json north_star, PAPERS.md: SparkER/MinoanER blocking).
+`_minhash_band_udf` lives here as the banded-MinHash sketch of the
+textdedup and streaming near-dup families.
 """
 
 from __future__ import annotations
@@ -43,9 +44,6 @@ _MERSENNE = (1 << 61) - 1
 # (lookbehind for a lowercase char/digit) so stems like "Techcorp"
 # keep their embedded "corp"
 _SUFFIXES = "Inc|Corp|Corporation|Solutions|Industries|Group|Labs|Ltd|Llc|Gmbh"
-
-DEFAULT_NUM_PERM = 64
-DEFAULT_BANDS = 32  # r = NUM_PERM / BANDS = 2
 
 
 def entity_universe(triples: DataFrame) -> DataFrame:
@@ -276,54 +274,6 @@ def prefix_candidate_pairs(
     )
 
 
-def lsh_candidate_pairs(
-    entities_with_shingles: DataFrame,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    max_bucket_size: int = 200,
-    uri_col: str = "uri",
-) -> tuple[DataFrame, DataFrame]:
-    """(candidate_pairs(uri_a, uri_b), dropped_buckets(band_idx, band_val, n)).
-
-    Oversized buckets (stop-word shingle patterns / hot head entities)
-    are excluded from pair generation and REPORTED, never silently
-    capped — the caller can route them to a secondary strategy.
-    """
-    from rdf_knowledge_extractor_spark.operators.textdedup import (
-        _bucket_candidate_pairs,
-    )
-
-    bands_of = _minhash_band_udf(num_perm, bands)
-    # posexplode applied DIRECTLY to the UDF call — the former
-    # withColumn + second-select shape duplicated the sketch UDF into
-    # two stacked ArrowEvalPython nodes (guide §4.4)
-    bucketed = entities_with_shingles.select(
-        uri_col,
-        F.posexplode(bands_of(shingle_hash_col(F.col("shingles")))).alias(
-            "band_idx", "band_val"
-        ),
-    )
-    # ONE shuffle (groupBy band key) + in-array pair combinations —
-    # replaces the former window-count + banded self-join, which
-    # shuffled the table and probed the persisted copy twice (round-4
-    # plan improvement; measured ~25% off the minhash sketch family's
-    # steady time).  Shared skew-safe shape with the textdedup
-    # families (_bucket_candidate_pairs); linking keeps the "drop"
-    # policy — hot head-entity buckets are excluded and reported so the
-    # caller can route them to a secondary strategy.
-    pairs, dropped = _bucket_candidate_pairs(
-        bucketed,
-        ["band_idx", "band_val"],
-        uri_col,
-        max_bucket_size=max_bucket_size,
-        oversized="drop",
-    )
-    return (
-        pairs.select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b")),
-        dropped,
-    )
-
-
 def verified_edges(
     pairs: DataFrame,
     entities_with_shingles: DataFrame,
@@ -372,8 +322,6 @@ def verified_edges(
 def link_entities(
     triples: DataFrame,
     threshold: float = 0.85,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
     max_bucket_size: int = 200,
 ) -> DataFrame:
     """Full linking stage: triples → mapping(uri, canonical).
@@ -393,13 +341,11 @@ def link_entities(
     2. **Fuzzy tier** — prefix-filtered candidates (exact recall at
        `threshold`; see prefix_candidate_pairs) + Jaccard verification
        + connected components run only over the key REPRESENTATIVES
-       (typo-level variants whose keys differ).  `num_perm`/`bands`
-       are retained for API compatibility with the MinHash-LSH
-       blocking (lsh_candidate_pairs) they previously configured.
-       When no fuzzy edge exists the CC loop exits before its first
-       iteration, so the tier costs two small jobs.
+       (typo-level variants whose keys differ).  Small edge lists
+       (all of them at bench scale) take the driver union-find arm of
+       connected_components: one bounded collect.
 
-    The result is identical to running LSH+CC over the full universe
+    The result is identical to running linking over the full universe
     (same-key members form cliques, so any cross-key member edge is
     equivalent to the corresponding representative edge), at a
     fraction of the job count — this matters both at tiny scale
@@ -412,7 +358,7 @@ def link_entities(
     """
     universe = entity_universe(triples)
     # localCheckpoint (not persist): the entity table is the root of
-    # every downstream linking plan (key tier, LSH, verify, CC rounds,
+    # every downstream linking plan (key tier, candidates, verify, CC,
     # final mapping join).  persist() caches DATA but keeps the full
     # upstream logical plan (scan → extract UDF → merge), and the
     # single-threaded driver re-ANALYZES that deep tree on every one of
@@ -444,8 +390,7 @@ def link_entities(
     # MinHash-vs-prefix measurement that motivated the switch).  The
     # rarity ranking that keeps big inputs near-linear costs three
     # extra tiny shuffles, so it is switched off below 1,000 entities
-    # (count on the checkpointed table is a cached-scan job) — same
-    # size-dispatch precedent as connected_components' labelprop arm.
+    # (count on the checkpointed table is a cached-scan job).
     pairs, _oversized = prefix_candidate_pairs(
         reps,
         threshold=threshold,

@@ -42,37 +42,6 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """`_dot` unrolled for a KNOWN dimension: the same 0.0-seeded
-    left-to-right fold (bit-identical IEEE result), but as a flat
-    expression tree that whole-stage codegen compiles — the
-    `aggregate`/`zip_with` higher-order form is interpreted per row
-    and dominated the brute-force scoring stage (guide §4.1: prefer
-    built-ins/codegen over interpreted paths in the hot loop)."""
-    e: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        e = e + F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-    return e
-
-
-def _sqnorm_fixed(a: Column, dim: int) -> Column:
-    """Σx² with `_norm`'s exact fold order (codegen-friendly twin)."""
-    e: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        x = F.element_at(a, i).cast("double")
-        e = e + x * x
-    return e
-
-
-def _norm_fixed(a: Column, dim: int) -> Column:
-    return F.sqrt(_sqnorm_fixed(a, dim))
-
-
-def cosine_fixed(a: Column, b: Column, dim: int) -> Column:
-    """cosine() for a known dim — bit-identical values, codegen path."""
-    return _dot_fixed(a, b, dim) / (_norm_fixed(a, dim) * _norm_fixed(b, dim))
-
-
 def _sim_expr(round_digits: int, dim: int | None,
               q_vec: str = "q_vec", c_vec: str = "c_vec") -> Column:
     """Rounded cosine between two joined vector columns.  With a known
@@ -81,15 +50,12 @@ def _sim_expr(round_digits: int, dim: int | None,
     computed once instead of once per compared pair; values are
     bit-identical (same fold order, same doubles divided).
 
-    The dot product stays the HOF `aggregate` fold: the unrolled
-    64-term expression tree (r6 batch 1) never actually reaches
-    whole-stage codegen — the plan shows ZERO WholeStageCodegen spans
-    even with the default hugeMethodLimit, because the projection
-    exceeds codegen's expression limits — so it ran as 384 interpreted
-    expression-tree nodes per pair, measured 4× SLOWER than the
-    specialized higher-order-function evaluator's lambda loop
-    (sf1.0-scale A/B on this box: unrolled 2.11 s vs HOF-dot+prenorm
-    0.58 s end-to-end, results exactly equal)."""
+    The dot product stays the HOF `aggregate` fold: an unrolled
+    per-dimension expression tree never reaches whole-stage codegen
+    (the projection exceeds codegen's expression limits) and measured
+    4× slower than the higher-order-function evaluator's lambda loop
+    (sf1.0-scale A/B: unrolled 2.11 s vs HOF-dot+prenorm 0.58 s
+    end-to-end, results exactly equal), so it was removed."""
     if dim is None:
         return F.round(cosine(F.col(q_vec), F.col(c_vec)), round_digits)
     return F.round(
@@ -110,9 +76,9 @@ def cosine_topk_bruteforce(
 ) -> DataFrame:
     """(query_id, neighbor_id, sim) — exact top-k per query, excluding
     self-matches.  The query side is broadcast (small by contract).
-    Pass `dim` when the embedding width is known: scoring then runs
-    under whole-stage codegen with per-vector norms computed once
-    (identical results, interpreted HOF fold eliminated)."""
+    Pass `dim` when the embedding width is known: each vector's norm is
+    then computed once, before the cross join, instead of once per
+    compared pair (identical results; see `_sim_expr`)."""
     from rdf_knowledge_extractor_spark.operators.textdedup import _spread
 
     q = queries.select(

@@ -1,4 +1,4 @@
-"""Graph traversal — `find_related_entities` as iterative frontier joins.
+"""Graph traversal — `find_related_entities` as a seeded BFS.
 
 The reference walks a LIFO stack over the full triple Vec per hop
 (ref:src/knowledge_graph/mod.rs:201-232), following edges in BOTH
@@ -8,10 +8,10 @@ reference output are artifacts of the stack; the *set* of reachable
 entities (excluding the seed) is the meaningful result, which is what
 this operator returns.
 
-Spark shape: pre-compute the bidirectional edge list once, then loop
-`max_depth` times joining the (tiny, broadcast) frontier against it and
-anti-joining the visited set.  Same DataFrame pattern as the
-connected-components stage (operators/components.py).
+Spark shape: pre-compute the bidirectional edge list once, then run
+the shared seeded BFS (operators/graph_local.py) for `max_depth` hops —
+a driver walk over the collected edges when the graph is small,
+broadcast-frontier joins otherwise — and drop the seed from its result.
 
 Faithfulness notes (both reproduced):
 - reverse edges additionally require the *current* node to look
@@ -26,79 +26,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdf_knowledge_extractor_spark.operators.graph_local import seeded_bfs
+
 
 def find_related_entities(
     graph: DataFrame, entity_uri: str, max_depth: int
 ) -> DataFrame:
     """DataFrame(entity: string) — distinct entities reachable from the
-    seed within max_depth hops (seed excluded unless reachable)."""
-    spark = graph.sparkSession
+    seed within max_depth hops, the seed itself excluded."""
     if max_depth <= 0:
-        return spark.createDataFrame([], "entity string")
+        return graph.sparkSession.createDataFrame([], "entity string")
 
     fwd = graph.select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     ).where(F.col("object").startswith("http"))
     # reverse edges: current node (the object) must itself be URI-ish;
-    # NULL subjects are dropped (they are not entities — previously a
-    # NULL-subject triple could surface a spurious NULL neighbor row,
-    # and the driver/distributed arms would diverge on it)
+    # NULL subjects are not entities, so they are not edges either
     rev = graph.select(
         F.col("object").alias("src"), F.col("subject").alias("dst")
     ).where(F.col("object").startswith("http") & F.col("subject").isNotNull())
-    edges = fwd.unionByName(rev)
-
-    # small-input arm: ONE limit-collect dispatches and fetches in the
-    # same job — if at most _DRIVER_MAX_EDGES rows come back we hold
-    # the complete edge list and BFS on the driver (output bounded by
-    # the node set; identical frontier/visited semantics to the loop
-    # below, which costs ~3 jobs per hop plus a full graph-lineage
-    # recompute per hop).  One extra row means the graph is bigger
-    # than the bound and the distributed loop runs unchanged.
-    from rdf_knowledge_extractor_spark.operators.components import (
-        _DRIVER_MAX_EDGES,
+    reached, _ = seeded_bfs(fwd.unionByName(rev), entity_uri, max_depth)
+    return reached.filter(F.col("node") != entity_uri).select(
+        F.col("node").alias("entity")
     )
-
-    sample = edges.limit(_DRIVER_MAX_EDGES + 1).collect()
-    if len(sample) <= _DRIVER_MAX_EDGES:
-        adj: dict[str, list[str]] = {}
-        for r in sample:
-            if r["src"] is not None and r["dst"] is not None:
-                adj.setdefault(r["src"], []).append(r["dst"])
-        frontier_set = {entity_uri}
-        visited = {entity_uri}
-        related_set: set[str] = set()
-        for _ in range(max_depth):
-            new = {
-                d for s in frontier_set for d in adj.get(s, ())
-            } - visited
-            if not new:
-                break
-            related_set |= new
-            visited |= new
-            frontier_set = new
-        return spark.createDataFrame(
-            [(n,) for n in sorted(related_set)], "entity string"
-        )
-
-    frontier = spark.createDataFrame([(entity_uri,)], "src string")
-    visited = frontier.select(F.col("src").alias("entity"))
-    related = spark.createDataFrame([], "entity string")
-
-    for _ in range(max_depth):
-        # frontier is small → broadcast side of the join
-        neighbors = (
-            edges.join(F.broadcast(frontier), on="src")
-            .select(F.col("dst").alias("entity"))
-            .distinct()
-        )
-        new = neighbors.join(visited, on="entity", how="left_anti")
-        # localCheckpoint truncates the growing lineage each iteration
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        related = related.unionByName(new)
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select(F.col("entity").alias("src"))
-
-    return related.distinct()

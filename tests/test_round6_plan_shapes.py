@@ -5,8 +5,6 @@ Covers (OPTIMIZATION_r06.md):
 - MinHash sketch UDF evaluated ONCE (the withColumn+posexplode shape
   duplicated it into two stacked ArrowEvalPython nodes — guide §4.4);
 - derive_triples single-scan inline form ≡ the former 6-branch union;
-- fixed-dim codegen cosine ≡ the interpreted higher-order-function
-  fold, bit-for-bit;
 - bands UDF output invariant under the cache-friendly chunk size.
 """
 
@@ -44,24 +42,6 @@ def test_minhash_sketch_udf_evaluated_once(spark):
         for i, ln in enumerate(lines[:-1])
     )
     assert not stacked, "bands UDF duplicated into stacked ArrowEvalPython nodes"
-
-
-def test_linking_sketch_udf_evaluated_once(spark):
-    from rdf_knowledge_extractor_spark.operators.linking import (
-        lsh_candidate_pairs,
-        with_canonical_key,
-    )
-
-    ents = with_canonical_key(
-        spark.createDataFrame([(f"http://x/e{i}",) for i in range(6)], ["uri"])
-    )
-    pairs, _ = lsh_candidate_pairs(ents)
-    lines = _plan(pairs).splitlines()
-    stacked = any(
-        "ArrowEvalPython" in ln and "ArrowEvalPython" in lines[i + 1]
-        for i, ln in enumerate(lines[:-1])
-    )
-    assert not stacked
 
 
 def test_derive_triples_single_scan_matches_union_twin(spark):
@@ -110,32 +90,6 @@ def test_derive_triples_single_scan_matches_union_twin(spark):
     key = lambda r: (r.subject, r.predicate, r.object, r.doc_seq, r.triple_seq)  # noqa: E731
     assert sorted(map(key, new.collect())) == sorted(map(key, old.collect()))
     assert new.schema == old.schema
-
-
-def test_cosine_fixed_bit_identical_to_hof(spark):
-    """The unrolled fold must reproduce the interpreted HOF cosine
-    bit-for-bit (same 0.0-seeded left-to-right addition order)."""
-    import random
-
-    from rdf_knowledge_extractor_spark.operators.similarity import (
-        cosine,
-        cosine_fixed,
-    )
-
-    rng = random.Random(7)
-    dim = 16
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(dim)], [rng.uniform(-1, 1) for _ in range(dim)])
-        for i in range(64)
-    ]
-    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
-    got = df.select(
-        "id",
-        cosine(F.col("a"), F.col("b")).alias("hof"),
-        cosine_fixed(F.col("a"), F.col("b"), dim).alias("fixed"),
-    ).collect()
-    for r in got:
-        assert r.hof == r.fixed, f"row {r.id}: {r.hof!r} != {r.fixed!r}"
 
 
 def test_topk_dim_path_equals_generic_path(spark):
@@ -254,65 +208,6 @@ def test_insert_new_familywise_matches_generic_antijoin(spark, tmp_path):
     got = entry.queries()["kg_insert_new"](spark, str(tmp_path))
     key = lambda r: tuple(str(x) for x in r)  # noqa: E731
     assert sorted(map(key, got.collect())) == sorted(map(key, generic.collect()))
-
-
-def test_driver_unionfind_matches_distributed_cc(spark):
-    """The small-input driver union-find arm must reproduce the
-    distributed star rounds exactly — string and integer node types,
-    self-loops, isolated-by-self-loop nodes, chains."""
-    import random
-
-    from rdf_knowledge_extractor_spark.operators.components import (
-        _components_driver,
-        connected_components_star,
-    )
-
-    rng = random.Random(13)
-    edges = [(f"n{rng.randint(0, 60)}", f"n{rng.randint(0, 60)}") for _ in range(120)]
-    edges += [("iso", "iso"), ("c0", "c1"), ("c1", "c2"), ("c2", "c3")]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    want_df, _ = connected_components_star(df, "src", "dst")
-    want = {r.node: r.component for r in want_df.collect()}
-    got = {r.node: r.component for r in _components_driver(df, "src", "dst").collect()}
-    assert got == want
-
-    int_edges = [(rng.randint(0, 40), rng.randint(0, 40)) for _ in range(80)]
-    df2 = spark.createDataFrame(int_edges, "src long, dst long")
-    want_df2, _ = connected_components_star(df2, "src", "dst")
-    want2 = {r.node: r.component for r in want_df2.collect()}
-    got2 = {r.node: r.component for r in _components_driver(df2, "src", "dst").collect()}
-    assert got2 == want2
-    assert _components_driver(df2, "src", "dst").schema["node"].dataType.simpleString() == "bigint"
-
-
-def test_traversal_driver_arm_matches_distributed_loop(spark, monkeypatch):
-    """find_related_entities' small-input driver BFS must reproduce the
-    distributed frontier loop exactly (both directions, URI-ish
-    filters, visited semantics, depth cap)."""
-    from rdf_knowledge_extractor_spark.operators import traversal as T
-
-    rows = [
-        ("http://x/a", "p", "http://x/b"),
-        ("http://x/b", "p", "http://x/c"),
-        ("http://x/c", "p", "lit-not-uri"),
-        ("http://x/d", "p", "http://x/a"),      # reverse reach into a
-        ("http://x/e", "p", "http://x/e"),      # self loop
-        ("http://x/z1", "p", "http://x/z2"),    # disconnected
-    ]
-    g = spark.createDataFrame(rows, "subject string, predicate string, object string")
-
-    driver = {
-        r.entity
-        for r in T.find_related_entities(g, "http://x/a", max_depth=2).collect()
-    }
-    monkeypatch.setattr(
-        "rdf_knowledge_extractor_spark.operators.components._DRIVER_MAX_EDGES", 0
-    )
-    dist = {
-        r.entity
-        for r in T.find_related_entities(g, "http://x/a", max_depth=2).collect()
-    }
-    assert driver == dist and driver
 
 
 def test_prefix_filter_exact_recall_at_threshold_boundary(spark):

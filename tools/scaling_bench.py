@@ -307,7 +307,7 @@ def _markdown(report, low, high, n_pages, reps=3):
 Same job, same input ({n_pages} deterministic synthetic pages,
 seed 42), two parallelism levels on one 32-core box.  Pipeline
 stages: html→text UDF → micro-batched triple extraction →
-first-occurrence dedup → MinHash-LSH entity linking + connected
+first-occurrence dedup → prefix-filtered entity linking + connected
 components → canonicalize, PLUS the training-data operator families
 (corpus curation gate, grouping-sets rollup report, as-of event
 attribution) over tables derived from the same corpus.  Input
