@@ -42,8 +42,8 @@ class LlmClient(Protocol):
 
 class HttpLlmClient:
     """OpenAI-compatible chat-completions client (stdlib urllib; used
-    executor-side from mapInPandas batches — one POST per document, but
-    batches amortize connection setup via keep-alive opener)."""
+    executor-side from mapInPandas batches — one POST per document, in
+    sequence; every request opens its own connection via `urlopen`)."""
 
     def __init__(
         self,

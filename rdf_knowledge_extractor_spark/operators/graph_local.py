@@ -69,10 +69,13 @@ def union_find(
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    return spark.createDataFrame(
+    # at most 2·MAX_EDGES rows, already on the driver: marked for
+    # broadcast, since a DataFrame built from a driver list carries no
+    # size estimate and a consumer's join would shuffle both sides
+    return F.broadcast(spark.createDataFrame(
         [(n, find(n)) for n in parent],
         _node_schema(node_type, "node", "component"),
-    )
+    ))
 
 
 def seeded_bfs(

@@ -1,4 +1,4 @@
-"""Entity linking: prefix-filtered candidates + verified edges.
+"""Entity linking: exact-key tier + prefix groups verified in place.
 
 North-star stage (BASELINE.json): coreferent entity URIs produced by
 extraction ("TechCorp Inc." / "TechCorp" / "TechCorp, Inc." …) must be
@@ -10,17 +10,21 @@ discovered as link candidates WITHOUT an O(n²) comparison.  Design:
    name, non-alnum stripped, trailing corporate suffix token removed)
    and its character-3-gram shingle array;
 3. key tier         = entities sharing a canonical key are one cluster
-   by construction; one groupBy collapses each key group to its
-   min-URI representative;
-4. prefix filtering = PPJoin-style inverted index over each
-   representative's rarest shingles (`prefix_candidate_pairs`): EXACT
-   recall at the Jaccard threshold; oversized postings route through
-   the distributed self-join arm, never dropped;
-5. verification     = pure-Catalyst Jaccard on the shingle arrays
-   (size(intersect)/size(union)) OR canonical-key equality — no
+   by construction; a window over the key gives every entity its
+   group's min-URI representative;
+4. prefix groups    = PPJoin-style prefixes over each representative's
+   rarest shingles (window-ranked by document frequency), grouped per
+   gram: EXACT recall at the Jaccard threshold (`prefix_length`,
+   integer-exact).  A bucket over `max_bucket_size` splits into hash
+   chunks, one group per pair of chunks, never dropped;
+5. verification     = `jaccard_at_least` on the xxhash64 shingle sets,
+   evaluated inside each group's in-array pair expansion, once per
+   pair (in the group of the smallest prefix gram the pair shares) —
+   no candidate-pair table, no join back to the representatives, no
    Python in the verify path;
 6. edges → connected components (operators/components.py) →
-   canonical id per cluster.
+   canonical id per cluster, joined onto every entity by its
+   representative.
 
 The reference has no equivalent (its store keeps every surface-form
 URI distinct); this stage is the scale-mandated addition
@@ -31,12 +35,16 @@ textdedup and streaming near-dup families.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
+from rdf_knowledge_extractor_spark.functions.text_analysis import char_shingles
 from rdf_knowledge_extractor_spark.operators.components import connected_components
 
 _MERSENNE = (1 << 61) - 1
@@ -55,19 +63,6 @@ def entity_universe(triples: DataFrame) -> DataFrame:
     return subs.unionByName(objs).distinct()
 
 
-def key_shingles(key) -> "F.Column":
-    """char-3-gram shingle array of a canonical-key column (the
-    shingles are a pure function of the key — shared by
-    with_canonical_key and the representative fast path in
-    link_entities).  Delegates to the shared char_shingles helper so
-    the k-gram expression has one definition."""
-    from rdf_knowledge_extractor_spark.functions.text_analysis import (
-        char_shingles,
-    )
-
-    return char_shingles(key, 3)
-
-
 def with_canonical_key(entities: DataFrame, uri_col: str = "uri") -> DataFrame:
     """Add `key` (normalized local name) and `shingles` (char 3-grams).
 
@@ -80,7 +75,7 @@ def with_canonical_key(entities: DataFrame, uri_col: str = "uri") -> DataFrame:
     stripped = F.lower(F.regexp_replace(unsuffixed, "[^a-zA-Z0-9]", ""))
     key = F.when(F.length(stripped) >= 3, stripped).otherwise(norm)
     df = entities.withColumn("key", key)
-    return df.withColumn("shingles", key_shingles(F.col("key")))
+    return df.withColumn("shingles", char_shingles(F.col("key"), 3))
 
 
 def shingle_hash_col(shingles_col):
@@ -176,6 +171,131 @@ def _minhash_band_udf(num_perm: int, bands: int, seed: int = 17):
     return bands_of
 
 
+def prefix_length(n, threshold: float) -> "F.Column":
+    """PPJoin prefix length n − ⌈t·n⌉ + 1 of an n-element set.  Under
+    any one global element order, two sets with Jaccard ≥ t share an
+    element within the first prefix_length elements of each (Xiao et
+    al., WWW 2008).  ⌈t·n⌉ is taken in decimal arithmetic on the
+    threshold's literal (0.9 stays 9/10; the double product
+    (1 − 0.9)·10 is 0.9999999999999998), so it is exact for every n."""
+    t = Decimal(str(threshold))
+    return (n - F.ceil(n * F.lit(t)) + F.lit(1)).cast("int")
+
+
+def jaccard_at_least(a, b, threshold: float) -> "F.Column":
+    """|A∩B| ÷ (|A|+|B|−|A∩B|) ≥ t for two DISTINCT sets, e.g. the
+    `array_distinct` xxhash64 shingle arrays.  Evaluated as
+    |A∩B|·(1+t) ≥ t·(|A|+|B|) in exact decimal arithmetic: one set
+    operation, no division, and no rounding at the boundary.  Two
+    empty sets count as equal."""
+    t = Decimal(str(threshold))
+    inter = F.size(F.array_intersect(a, b))
+    return inter * F.lit(1 + t) >= (F.size(a) + F.size(b)) * F.lit(t)
+
+
+def _prefix_rows(
+    ent: DataFrame,
+    threshold: float,
+    max_bucket_size: int,
+    uri_col: str = "uri",
+    rank_prefixes: bool = True,
+) -> DataFrame:
+    """(id, sh, pre, g, n, k, c) — one row per prefix gram of each entity.
+
+    `sh` is the entity's shingle set as distinct xxhash64 values, `pre`
+    its prefix and `g` one gram of it; with `rank_prefixes` the prefix
+    is the `prefix_length` rarest grams by (document frequency, gram) —
+    a global order, so recall stays exact — else every gram.  `n` is the
+    gram's bucket size among PREFIX rows (document frequency counts
+    every gram occurrence and would overstate a gram that is frequent
+    overall but rare in prefixes); a bucket over `max_bucket_size`
+    splits into k = ⌈n ÷ max_bucket_size⌉ hash chunks and `c` is the
+    entity's chunk."""
+    rows = ent.select(
+        F.col(uri_col).alias("id"),
+        F.array_distinct(shingle_hash_col(F.col("shingles"))).alias("sh"),
+    ).select("id", "sh", F.explode("sh").alias("g"))
+    if rank_prefixes:
+        rows = (
+            rows.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("g")))
+            .withColumn(
+                "_rank",
+                F.row_number().over(Window.partitionBy("id").orderBy("_df", "g")),
+            )
+            .filter(F.col("_rank") <= prefix_length(F.size("sh"), threshold))
+            # same partitioning and order as the rank: no extra shuffle
+            .withColumn("pre", F.collect_list("g").over(Window.partitionBy("id")))
+        )
+    else:
+        rows = rows.withColumn("pre", F.col("sh"))
+    n = F.count(F.lit(1)).over(Window.partitionBy("g"))
+    return (
+        rows.withColumn("n", n)
+        .withColumn("k", F.ceil(F.col("n") / F.lit(max_bucket_size)))
+        .select(
+            "id", "sh", "pre", "g", "n", "k",
+            F.pmod(F.xxhash64("id"), F.col("k")).alias("c"),
+        )
+    )
+
+
+def _prefix_groups(rows: DataFrame) -> DataFrame:
+    """(g, lo, hi, members) from `_prefix_rows`: each member goes to the
+    groups (g, min(c, j), max(c, j)) for every chunk j of its gram, so
+    each pair of chunks meets in exactly one group and no group holds
+    more than its two chunks (≈ 2·max_bucket_size members).  The
+    repartition on the group key spreads a hot gram's groups across
+    tasks.  Members are sorted by id; groups of one are dropped."""
+    j = F.explode(F.sequence(F.lit(0), F.col("k") - 1)).alias("j")
+    return (
+        rows.select("g", "c", j, F.struct("id", "c", "sh", "pre").alias("m"))
+        .select(
+            "g",
+            F.least("c", "j").alias("lo"),
+            F.greatest("c", "j").alias("hi"),
+            "m",
+        )
+        .repartition("g", "lo", "hi")
+        .groupBy("g", "lo", "hi")
+        .agg(F.array_sort(F.collect_list("m")).alias("members"))
+        .filter(F.size("members") >= 2)
+    )
+
+
+def _group_pairs(groups: DataFrame, threshold: float | None = None) -> DataFrame:
+    """(uri_a, uri_b), uri_a < uri_b, each pair once: a group owns a
+    member pair when the pair's chunks are the group's (all pairs of a
+    diagonal group, lo = hi; cross-chunk pairs otherwise) and the
+    group's gram is the smallest prefix gram the two share.  With
+    `threshold`, only owned pairs whose shingle sets pass
+    `jaccard_at_least` are emitted, tested inside the in-array
+    expansion."""
+    m = F.col("members")
+    n = F.size(m)
+    diag = F.col("lo") == F.col("hi")
+
+    def owned(a, b):
+        own = (diag | (a["c"] != b["c"])) & (
+            F.array_min(F.array_intersect(a["pre"], b["pre"])) == F.col("g")
+        )
+        if threshold is None:
+            return own
+        return own & jaccard_at_least(a["sh"], b["sh"], threshold)
+
+    pairs = F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), n - 2),
+            lambda i: F.transform(
+                F.filter(F.sequence(i + 1, n - 1), lambda j: owned(m[i], m[j])),
+                lambda j: F.struct(
+                    m[i]["id"].alias("uri_a"), m[j]["id"].alias("uri_b")
+                ),
+            ),
+        )
+    )
+    return groups.select(F.explode(pairs).alias("p")).select("p.uri_a", "p.uri_b")
+
+
 def prefix_candidate_pairs(
     entities_with_shingles: DataFrame,
     threshold: float = 0.85,
@@ -183,95 +303,24 @@ def prefix_candidate_pairs(
     uri_col: str = "uri",
     rank_prefixes: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """(candidate_pairs(uri_a, uri_b), oversized_report) via PREFIX
-    FILTERING (PPJoin family) over the canonical-key shingles.
+    """(candidate_pairs(uri_a, uri_b), oversized_report(g, n))
+    via PREFIX FILTERING (PPJoin family) over the shingle sets.
 
-    EXACT recall by theorem: two shingle sets with Jaccard ≥ t must
-    share an element within each set's ⌊(1-t)·n⌋+1 RAREST shingles —
-    so only those prefixes enter the inverted index, with zero recall
-    loss (the guarantee the exact-Jaccard verifier needs; MinHash-LSH
-    only offered a probabilistic one).  On short canonical keys this
-    is also orders of magnitude cheaper: numeric-suffix key families
-    ("doc123…", "doc124…") share most of their 3-grams, so banded
-    MinHash put thousands of sub-threshold keys in the same buckets —
-    measured 2.07M candidate pairs from 15k representatives at sf0.1,
-    21 s of verification — while rarest-first prefixes keep posting
-    lists to the handful of entities sharing a RARE gram.  Oversized
-    postings route through the distributed self-join arm (exact, never
-    dropped), keeping recall deterministic at any scale.
-    """
-    from rdf_knowledge_extractor_spark.operators.textdedup import (
-        _bucket_candidate_pairs,
+    EXACT recall by theorem (`prefix_length`): every pair with Jaccard
+    ≥ t shares a prefix gram.  Rarest-first prefixes keep buckets to
+    the handful of entities sharing a RARE gram: on numeric-suffix key
+    families ("doc123…", "doc124…") banded MinHash once gave 2.07M
+    candidate pairs from 15k representatives at sf0.1.
+    `rank_prefixes=False` makes every shingle a prefix gram (a
+    candidate superset).  Oversized buckets are chunked, never
+    dropped; the report lists them with their size (g is the gram's
+    xxhash64)."""
+    rows = _prefix_rows(
+        entities_with_shingles, threshold, max_bucket_size, uri_col, rank_prefixes
     )
-
-    inv = entities_with_shingles.select(
-        F.col(uri_col).alias("id"), F.explode("shingles").alias("g")
-    )
-    if rank_prefixes:
-        df_tbl = inv.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-        ranked = (
-            inv.join(df_tbl, on="g")
-            .groupBy("id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col("df"), F.col("g")))),
-                    lambda s: s["g"],
-                ).alias("by_rarity")
-            )
-        )
-        # prefix length ⌊(1−t)·n⌋ + 1 with an epsilon BEFORE the
-        # floor: in IEEE754 (1−0.9)·10 = 0.9999999999999998, whose
-        # bare floor truncates the prefix one short and silently
-        # breaks the exact-recall theorem (a J=0.9 pair at t=0.9 was
-        # missed — pinned in tests).  The epsilon only ever errs
-        # toward a LONGER prefix (a candidate superset, removed by
-        # the exact verifier), never shorter.
-        prefix = ranked.select(
-            "id",
-            F.explode(
-                F.slice(
-                    "by_rarity",
-                    1,
-                    (
-                        F.floor((1 - threshold) * F.size("by_rarity") + F.lit(1e-9))
-                        + F.lit(1)
-                    ).cast("int"),
-                )
-            ).alias("g"),
-        )
-    else:
-        # tiny-input fast arm: index EVERY shingle (a candidate
-        # superset of the ranked prefix — recall still exact) and
-        # generate pairs with a DIRECT self-equi-join on the inverted
-        # index.  The pair set is identical to the bucket machinery's
-        # (its selfjoin arm makes bucketed generation ≡ the plain
-        # self-join for every bucket size), but the plan is 2 stages
-        # instead of groupBy + persist + in-array combos + report
-        # branches — at the sizes this arm dispatches on (< 1,000
-        # entities, see link_entities) the job-latency floor is the
-        # whole cost.  Oversized-report is vacuously empty.
-        a = inv.select(F.col("id").alias("id_a"), "g")
-        b = inv.select(F.col("id").alias("id_b"), "g")
-        pairs = (
-            a.join(b, on="g")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        report = entities_with_shingles.sparkSession.createDataFrame(
-            [], "g string, n int"
-        )
-        return (
-            pairs.select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b")),
-            report,
-        )
-    pairs, report = _bucket_candidate_pairs(
-        prefix, ["g"], "id", max_bucket_size=max_bucket_size, oversized="selfjoin"
-    )
-    return (
-        pairs.select(F.col("id_a").alias("uri_a"), F.col("id_b").alias("uri_b")),
-        report,
-    )
+    pairs = _group_pairs(_prefix_groups(rows))
+    report = rows.filter(F.col("n") > max_bucket_size).select("g", "n").distinct()
+    return pairs, report
 
 
 def verified_edges(
@@ -280,25 +329,15 @@ def verified_edges(
     threshold: float = 0.85,
     uri_col: str = "uri",
 ) -> DataFrame:
-    """Filter candidates: canonical-key equality OR shingle Jaccard ≥ t.
+    """Filter candidates: canonical-key equality OR shingle Jaccard ≥ t
+    (`jaccard_at_least` on the distinct xxhash64 shingle sets — equal
+    to the string-shingle Jaccard up to a 2⁻⁶⁴ in-pair collision).
 
     Default t=0.85: tier-1 key equality already resolves suffix and
     punctuation variants, so the fuzzy tier only needs typo-level
     similarity — and looser thresholds create false merges between
     short names with numeric suffixes (J(person1, person17)=0.83).
-
-    Pure Catalyst (array_intersect/array_union) — hot entities that
-    appear in many pairs are handled by the AQE skew-join splitter.
-    The set ops run on XXHASH64-HASHED shingles: int64 intersect/union
-    sizes equal the string-shingle sizes up to a 2⁻⁶⁴ in-pair hash
-    collision (the same accepted equivalence as minhash_lsh_pairs),
-    and compare ~3× cheaper than 3-char strings on the candidate
-    volume this join sees.
     """
-    # array_distinct on the hashes makes them SETS even under a hash
-    # collision (result unchanged — intersect/union deduplicate), so
-    # |A∪B| = |A|+|B|−|A∩B| holds exactly and the per-pair union hash
-    # set is never built: one set-op per candidate pair instead of two
     ent = entities_with_shingles.select(
         F.col(uri_col),
         F.col("key"),
@@ -310,13 +349,11 @@ def verified_edges(
     b = ent.select(
         F.col(uri_col).alias("uri_b"), F.col("key").alias("key_b"), F.col("_sh").alias("sh_b")
     )
-    joined = pairs.join(a, on="uri_a").join(b, on="uri_b").withColumn(
-        "_i", F.size(F.array_intersect("sh_a", "sh_b"))
-    )
-    jaccard = F.col("_i") / (F.size("sh_a") + F.size("sh_b") - F.col("_i"))
-    return joined.filter((F.col("key_a") == F.col("key_b")) | (jaccard >= threshold)).select(
-        "uri_a", "uri_b"
-    )
+    joined = pairs.join(a, on="uri_a").join(b, on="uri_b")
+    return joined.filter(
+        (F.col("key_a") == F.col("key_b"))
+        | jaccard_at_least(F.col("sh_a"), F.col("sh_b"), threshold)
+    ).select("uri_a", "uri_b")
 
 
 def link_entities(
@@ -333,17 +370,22 @@ def link_entities(
     Two-tier design:
 
     1. **Exact-key tier** — entities sharing a canonical key are one
-       cluster by construction (their shingle sets are identical);
-       one groupBy collapses each key group to its min-URI
-       representative.  This resolves the overwhelming majority of
-       coreference (suffix/punctuation variants) with a single
-       shuffle.
-    2. **Fuzzy tier** — prefix-filtered candidates (exact recall at
-       `threshold`; see prefix_candidate_pairs) + Jaccard verification
-       + connected components run only over the key REPRESENTATIVES
-       (typo-level variants whose keys differ).  Small edge lists
-       (all of them at bench scale) take the driver union-find arm of
-       connected_components: one bounded collect.
+       cluster by construction (their shingle sets are identical); a
+       window over the key gives each entity its group's min-URI
+       representative inside the checkpointed entity table.  This
+       resolves the overwhelming majority of coreference
+       (suffix/punctuation variants) with a single shuffle, and the
+       final mapping is one join of the components on the
+       representative (a broadcast when union-find produced them).
+    2. **Fuzzy tier** — one plan over the key REPRESENTATIVES
+       (typo-level variants whose keys differ): each representative's
+       rarest shingles form its prefix (exact recall at `threshold`,
+       see `prefix_length`), prefix rows group per gram (oversized
+       buckets in hash chunks), and `jaccard_at_least` runs inside the
+       in-array pair expansion, so only verified edges leave the
+       groups.  Small edge lists (all of them at bench scale) take the
+       driver union-find arm of connected_components: one bounded
+       collect.
 
     The result is identical to running linking over the full universe
     (same-key members form cliques, so any cross-key member edge is
@@ -358,58 +400,33 @@ def link_entities(
     """
     universe = entity_universe(triples)
     # localCheckpoint (not persist): the entity table is the root of
-    # every downstream linking plan (key tier, candidates, verify, CC,
-    # final mapping join).  persist() caches DATA but keeps the full
-    # upstream logical plan (scan → extract UDF → merge), and the
-    # single-threaded driver re-ANALYZES that deep tree on every one of
-    # the ~dozen actions this stage runs — measured at multiple seconds
-    # per action at bench scale.  Checkpointing truncates the lineage
-    # so each action analyzes a flat plan.  Trade-offs, accepted: (a)
-    # truncated lineage is NOT recomputable — executor/block loss fails
-    # the job, and the enclosing stage is re-run from the pipeline's
-    # durable stage checkpoint (plans/pipeline.py resume), the same
-    # trade the CC loop makes; (b) checkpoint blocks are freed when the
-    # driver GCs the RDD, not by clearCache() — long-lived sessions
-    # calling link_entities repeatedly release them via normal GC of
-    # the returned mapping's references.
-    ent = with_canonical_key(universe).localCheckpoint(eager=True)
-
-    # tier 1: key group → min-URI representative
-    key_rep = ent.groupBy("key").agg(F.min("uri").alias("rep"))
-    # one entity row per representative: shingles are a pure function
-    # of the key, so they are RE-DERIVED from key_rep instead of joined
-    # back against `ent` — drops a whole join (shuffle + filter pass
-    # over the entity table) from the linking critical path
-    reps = key_rep.select(
-        F.col("rep").alias("uri"), "key", key_shingles(F.col("key")).alias("shingles")
-    ).persist()
-
-    # tier 2: fuzzy linking over representatives — prefix-filtered
-    # candidates (EXACT recall at `threshold`, no sketch UDF, no
-    # python worker round-trip; see prefix_candidate_pairs for the
-    # MinHash-vs-prefix measurement that motivated the switch).  The
-    # rarity ranking that keeps big inputs near-linear costs three
-    # extra tiny shuffles, so it is switched off below 1,000 entities
-    # (count on the checkpointed table is a cached-scan job).
-    pairs, _oversized = prefix_candidate_pairs(
-        reps,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
-        rank_prefixes=ent.count() > 1_000,
+    # every downstream linking plan (prefix groups, CC, final mapping
+    # join).  persist() caches DATA but keeps the full upstream logical
+    # plan (scan → extract UDF → merge), and the single-threaded driver
+    # re-ANALYZES that deep tree on every action this stage runs —
+    # measured at multiple seconds per action at bench scale.
+    # Checkpointing truncates the lineage so each action analyzes a
+    # flat plan.  Trade-offs, accepted: (a) truncated lineage is NOT
+    # recomputable — executor/block loss fails the job, and the
+    # enclosing stage is re-run from the pipeline's durable stage
+    # checkpoint (plans/pipeline.py resume), the same trade the CC loop
+    # makes; (b) checkpoint blocks are freed when the driver GCs the
+    # RDD, not by clearCache() — long-lived sessions calling
+    # link_entities repeatedly release them via normal GC of the
+    # returned mapping's references.
+    # tier 1: each entity carries its key group's min-URI representative
+    ent = (
+        with_canonical_key(universe)
+        .withColumn("rep", F.min("uri").over(Window.partitionBy("key")))
+        .localCheckpoint(eager=True)
     )
-    # key equality is already resolved by tier 1 → only true fuzzy edges
-    edges = verified_edges(pairs, reps, threshold=threshold).filter(
-        F.col("uri_a") != F.col("uri_b")
-    )
+    reps = ent.filter(F.col("uri") == F.col("rep")).select("uri", "shingles")
+
+    # tier 2: verified fuzzy edges straight out of the prefix groups —
+    # no candidate-pair table and no join back to the representatives
+    rows = _prefix_rows(reps, threshold, max_bucket_size)
+    edges = _group_pairs(_prefix_groups(rows), threshold)
     components = connected_components(edges, src="uri_a", dst="uri_b")
-    rep_canon = (
-        key_rep.select(F.col("rep").alias("node"), "key")
-        .join(components, on="node", how="left")
-        .select(
-            "key",
-            F.coalesce(F.col("component"), F.col("node")).alias("canonical"),
-        )
-    )
-    mapping = ent.join(rep_canon, on="key").select("uri", "canonical")
-    reps.unpersist()
-    return mapping
+    return ent.join(
+        components, on=F.col("rep") == F.col("node"), how="left"
+    ).select("uri", F.coalesce("component", "rep").alias("canonical"))

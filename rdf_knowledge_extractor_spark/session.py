@@ -59,6 +59,13 @@ def get_spark(
         #   path lost 25%; combined, both workloads hit their best.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.sql.codegen.methodSplitThreshold", "512")
+        # Codegen cache (static; Spark's default is 100 entries): one
+        # pipeline pass generates ~130 distinct classes, so the default
+        # LRU evicted them before the next pass and every pass
+        # recompiled them (Janino, then the JIT again).  A repeated
+        # 30-page stub pass + store commit on local[4]: 123 compiles at
+        # 100 entries, 1 at 2000.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

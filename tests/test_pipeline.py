@@ -283,3 +283,20 @@ def test_pipeline_old_manifest_without_schema_recomputes(spark, example_config, 
     assert pipe.results and not any(r.resumed for r in pipe.results)
     assert all("schema" in m for m in pipe.stage_manifests())
     assert pipe.lineage().count() == 10
+
+
+def test_repeated_pipeline_pass_reuses_generated_code(spark, example_config, tmp_path):
+    """One pipeline pass generates more classes than Spark's default
+    codegen cache holds (100); the session's cache keeps them, so an
+    identical second pass compiles almost nothing."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    pages = pages_dataframe(spark, 20, seed=5).drop("text")
+
+    def compiles_in_pass(i):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        pipe = KgPipeline(spark, example_config, str(tmp_path / f"p{i}"), partitions=4)
+        pipe.commit_to_store(pipe.run(pages), str(tmp_path / f"store{i}"))
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles_in_pass(0)
+    assert compiles_in_pass(1) <= 20

@@ -214,10 +214,13 @@ def test_prefix_filter_exact_recall_at_threshold_boundary(spark):
     """IEEE754 regression: (1-0.9)*10 = 0.9999999999999998, whose bare
     floor truncated the PPJoin prefix one short — a pair at EXACTLY
     the threshold (J = 9/10 = 0.9 at t=0.9) was silently missed,
-    breaking prefix filtering's exact-recall theorem.  The epsilon
-    before the floor must recover it (and may only LENGTHEN the
-    prefix — a verified-away candidate superset)."""
+    breaking prefix filtering's exact-recall theorem.  The prefix
+    length is integer-exact, so the pair is a candidate and, verified
+    inside its prefix group, an edge."""
     from rdf_knowledge_extractor_spark.operators.linking import (
+        _group_pairs,
+        _prefix_groups,
+        _prefix_rows,
         prefix_candidate_pairs,
     )
 
@@ -230,3 +233,5 @@ def test_prefix_filter_exact_recall_at_threshold_boundary(spark):
     )
     pairs, _ = prefix_candidate_pairs(ents, threshold=0.9, rank_prefixes=True)
     assert [(r.uri_a, r.uri_b) for r in pairs.collect()] == [("A", "B")]
+    edges = _group_pairs(_prefix_groups(_prefix_rows(ents, 0.9, 200)), 0.9)
+    assert [(r.uri_a, r.uri_b) for r in edges.collect()] == [("A", "B")]

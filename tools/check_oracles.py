@@ -4,6 +4,8 @@
 hash.  Use before a round ends to catch contract drift early.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+(without an existing sf_dir first, every argument is a query name and
+the default sf0.01 directory is used)
 """
 
 from __future__ import annotations
@@ -44,8 +46,13 @@ def _hash_rows(cols, rows) -> str:
 
 
 def main() -> int:
+    if len(sys.argv) > 1 and not os.path.isdir(sys.argv[1]):
+        # every argument is a query name: run them on the default sf_dir
+        only = set(sys.argv[1:])
+        del sys.argv[1:]
+    else:
+        only = set(sys.argv[2:])
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
     import duckdb
 
